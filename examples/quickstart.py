@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from search_engine_spark.operators import parser as P  # noqa: E402
 from search_engine_spark.operators import rank as R  # noqa: E402
 from search_engine_spark.operators import query as Q  # noqa: E402
 from search_engine_spark.session import get_spark  # noqa: E402
@@ -55,8 +56,10 @@ def main() -> int:
     assert n_and <= n_or
     print(f"AND(apple,rotten)={n_and}  OR={n_or}")
 
-    tree = Q.parse_bool("apple AND (rotten OR barrel) AND NOT zebra", "naive")
-    n_tree = Q.search_bool(dec_all(segs, tree), tree).count()
+    n_tree = P.search_query_string(
+        spark, segs, stats, "apple AND (rotten OR barrel) AND NOT zebra",
+        analyzer="naive",
+    ).count()
     assert n_tree >= n_and  # OR-widened positive side, absent negative
     print(f"bool tree apple AND (rotten OR barrel) AND NOT zebra -> {n_tree} docs")
 
@@ -200,13 +203,6 @@ def main() -> int:
     shutil.rmtree(idx, ignore_errors=True)
     print("QUICKSTART OK")
     return 0
-
-
-def dec_all(segs, tree):
-    from search_engine_spark.operators.query import bool_leaf_terms
-    from search_engine_spark.sources.segments import decode_postings
-
-    return decode_postings(segs, bool_leaf_terms(tree))
 
 
 if __name__ == "__main__":

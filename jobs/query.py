@@ -4,30 +4,44 @@ Usage::
 
     spark-submit --py-files search_engine_spark.zip jobs/query.py \
         --index <index dir> --mode bm25 --k 10 -- spark query join
+    spark-submit ... jobs/query.py --index <index dir> \
+        --q 'spark AND (join OR merge) AND NOT scan'
 
-Modes: bm25 (block-max DAAT), tfidf (reference-parity cosine), and/or/phrase
-(boolean + positional), keyword, prefix (term-dictionary range seek),
-near (--window positional proximity), not (--exclude anti-terms),
-fuzzy (--max-dist/--max-expansions typo-tolerant dictionary expansion),
-regex / wildcard (RegexpQuery / WildcardQuery dictionary expansion,
---max-expansions cap),
-bool (nested AND/OR/NOT with parentheses, one quoted expression),
-sloppy (ordered phrase with --slop extra tokens between terms),
-suggest (did-you-mean term corrections), mlt (--corpus more-like-this: the
-single positional arg is the seed docId), msm (--min-match N of the terms,
-Lucene minimumShouldMatch), spanfirst (term within the first --window
-positions, Lucene SpanFirstQuery), rescore (BM25 top ``--rescore-window``
-re-ranked with an exact ``--phrase`` match adding ``--boost`` — the Lucene
-QueryRescorer), decay (function-score gauss/exp/linear decay of
-``--stat-field`` around ``--origin``/``--scale``, needs --corpus),
-sigterms (significant-terms JLH over the AND-hit set), stats / percentiles
-(metric aggregations of ``--stat-field`` over the AND-hit set, need
---corpus), complete (autocomplete: dictionary terms extending the prefix,
-df-ranked), vrescore (hybrid semantic rescore: BM25 top ``--rescore-window``
-+ ``--vec-weight`` x cosine vs the ``--seed-vec`` embedding from ``--emb``). --highlight adds a query-aware <em>-wrapped
-snippet per result (needs --corpus). and/keyword accept repeatable
---field col=value constraints against a fielded index
-(build_index(fields=…)). Prints one JSON line with results + latency.
+Boolean, phrase and term-dictionary queries go through ONE query string,
+``--q`` (operators/parser.py), which implies ``--mode parsed`` (membership)
+unless ``--mode ranked`` (BM25 over the matches):
+
+- ``a AND b``, ``a OR b``, ``a AND NOT c``, ``a`` (single keyword);
+- nested trees with parentheses: ``spark AND (join OR merge) AND NOT scan``;
+- ``"a b"`` exact phrase, ``"a b"~N`` ordered sloppy phrase (slop N);
+- ``pre*`` prefix, ``a~N`` fuzzy (``--max-expansions`` caps the
+  expansion), ``te?m*`` wildcard, ``/m[ae]rge/`` regexp;
+- ``field:term`` and ``col:[lo TO hi]`` (range needs ``--corpus``).
+
+A regexp is anchored to the whole dictionary term, so a substring match
+reads ``/.*pat.*/``. Terms must be joined with AND / OR explicitly: bare
+adjacency is a parse error, not an implicit operator. Repeatable
+``--field col=value`` constraints against a fielded index
+(``build_index(fields=…)``) AND into any parsed ``--q``.
+
+Other modes: bm25 (block-max DAAT), tfidf (reference-parity cosine),
+near (--window unordered positional proximity of two terms), msm
+(--min-match N of the terms, Lucene minimumShouldMatch), spanfirst (term
+within the first --window positions, Lucene SpanFirstQuery), suggest
+(did-you-mean term corrections), complete (autocomplete: dictionary terms
+extending the prefix, df-ranked), mlt (--corpus more-like-this: the single
+positional arg is the seed docId), dismax, substring / regexcontent / grep
+(trigram code search, need --corpus), rescore (BM25 top
+``--rescore-window`` re-ranked with an exact ``--phrase`` match adding
+``--boost`` — the Lucene QueryRescorer), decay (function-score
+gauss/exp/linear decay of ``--stat-field`` around ``--origin``/``--scale``,
+needs --corpus), sigterms (significant-terms JLH over the AND-hit set),
+stats / percentiles (metric aggregations of ``--stat-field`` over the
+AND-hit set, need --corpus), vrescore (hybrid semantic rescore: BM25 top
+``--rescore-window`` + ``--vec-weight`` x cosine vs the ``--seed-vec``
+embedding from ``--emb``). --highlight adds a query-aware <em>-wrapped
+snippet per result (needs --corpus). Prints one JSON line with results +
+latency.
 
 Tombstoned docs (jobs/delete.py / operators/delete.py) are excluded by
 default — the DAAT kernel masks them as blocks decode, the boolean paths
@@ -83,18 +97,17 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--index", required=True)
     ap.add_argument("--mode", default="bm25",
-                    choices=["bm25", "tfidf", "and", "or", "phrase", "keyword",
-                             "not", "near", "prefix", "fuzzy", "suggest",
-                             "mlt", "regex", "wildcard", "bool", "sloppy", "substring",
-                             "regexcontent", "grep", "parsed", "ranked", "msm",
-                             "spanfirst", "dismax", "rescore", "decay",
-                             "sigterms", "stats", "percentiles", "complete",
-                             "vrescore"])
+                    choices=["bm25", "tfidf", "near", "suggest", "mlt",
+                             "substring", "regexcontent", "grep", "parsed",
+                             "ranked", "msm", "spanfirst", "dismax", "rescore",
+                             "decay", "sigterms", "stats", "percentiles",
+                             "complete", "vrescore"])
     ap.add_argument("--q", default=None,
                     help="unified Lucene-style query string (implies "
                          "--mode parsed unless --mode ranked, which "
                          "BM25-scores the matches): AND/OR/NOT, "
-                         "\"phrase\"~slop, term~dist fuzzy, pre*, "
+                         "\"phrase\"~slop, term~dist fuzzy, pre*, te?m* "
+                         "wildcard, /regexp/ (whole-term anchored), "
                          "field:term, col:[lo TO hi] (range needs "
                          "--corpus)")
     ap.add_argument("--k", type=int, default=10)
@@ -102,22 +115,20 @@ def main(argv: list[str] | None = None) -> int:
                     help="near mode: max positions between the two terms; "
                          "spanfirst mode: the term must occur within the "
                          "first N token positions (SpanFirstQuery)")
-    ap.add_argument("--slop", type=int, default=0,
-                    help="sloppy mode: max extra tokens between consecutive terms")
-    ap.add_argument("--exclude", nargs="*", default=[],
-                    help="not mode: terms the document must NOT contain")
     ap.add_argument("--max-dist", type=int, default=1,
-                    help="fuzzy/suggest: max Levenshtein edits")
+                    help="suggest mode: max Levenshtein edits")
     ap.add_argument("--max-expansions", type=int, default=64,
-                    help="fuzzy: cap on expanded dictionary terms")
+                    help="parsed/ranked modes: cap on the dictionary terms "
+                         "one fuzzy / wildcard / regexp leaf expands to")
     ap.add_argument("--corpus", default=None,
                     help="mlt/substring/regexcontent/grep modes: corpus "
                          "parquet dir (raw doc text source)")
     ap.add_argument("--top-terms", type=int, default=10,
                     help="mlt mode: seed terms kept by tf-idf weight")
     ap.add_argument("--field", action="append", default=[],
-                    help="and/keyword modes: col=value fielded-index "
-                         "constraint (repeatable; needs fields= at build)")
+                    help="parsed mode: col=value fielded-index constraint "
+                         "ANDed into the --q tree (repeatable; needs "
+                         "fields= at build)")
     ap.add_argument("--boost-field", action="append", default=[],
                     help="bm25 mode: col=value:weight fielded-BM25 part "
                          "(repeatable; needs fields= at build + finalized "
@@ -208,11 +219,6 @@ def main(argv: list[str] | None = None) -> int:
         field_terms,
         fuzzy_candidates,
         search_and,
-        search_and_not,
-        search_keyword,
-        search_or,
-        search_phrase,
-        search_prefix,
         search_proximity,
     )
     from search_engine_spark.operators.rank import Scorer, score_query, score_query_daat
@@ -249,8 +255,8 @@ def main(argv: list[str] | None = None) -> int:
     lo, hi = m["stats"].get("docid_lo"), m["stats"].get("docid_hi")
     span = (lo, hi) if lo is not None and hi is not None else None
 
-    if a.field and a.mode not in ("and", "keyword"):
-        ap.error("--field applies to and/keyword modes")
+    if a.field and a.mode != "parsed":
+        ap.error("--field applies to --q queries in parsed mode")
     if a.boost_field and a.mode != "bm25":
         ap.error("--boost-field applies to bm25 mode")
 
@@ -306,11 +312,6 @@ def main(argv: list[str] | None = None) -> int:
         out = score_query(spark, dec, stats, a.terms, n_docs, avgdl,
                           Scorer("tfidf_cosine"), k=a.k, analyzer=analyzer)
         rows = [{"docId": r.docId, "score": round(r.score, 6)} for r in out.collect()]
-    elif a.mode == "prefix":
-        # the raw prefix is matched against the term dictionary as-is
-        # (dictionary entries are analyzer output already)
-        out = live(search_prefix(segs, a.terms[0], analyzer), tomb)
-        rows = [{"docId": r.docId} for r in out.limit(a.k).collect()]
     elif a.mode == "near":
         terms = analyze_query(a.terms, analyzer)
         if len(terms) != 2:
@@ -318,37 +319,37 @@ def main(argv: list[str] | None = None) -> int:
         dec = live(decode_postings(segs, terms, with_positions=True), tomb)
         out = search_proximity(dec, terms[0], terms[1], a.window)
         rows = [{"docId": r.docId} for r in out.limit(a.k).collect()]
-    elif a.mode == "fuzzy":
-        # two-stage: bounded dictionary expansion, then an OR seek with the
-        # usual In pushdown (same plan family as --mode or)
-        cands = fuzzy_candidates(
-            stats, analyze_query(a.terms, analyzer)[0], a.max_dist,
-            a.max_expansions,
-        ).collect()
-        terms = [r.term for r in cands]
-        dec = live(decode_postings(segs, terms), tomb)
-        rows = [
-            {"docId": r.docId}
-            for r in search_or(dec, terms).limit(a.k).collect()
-        ]
-    elif a.mode == "sloppy":
-        from search_engine_spark.operators.query import search_sloppy_phrase
-
-        terms = analyze_query(a.terms, analyzer)
-        dec = live(
-            decode_postings(segs, sorted(set(terms)), with_positions=True), tomb
-        )
-        rows = [
-            {"docId": r.docId}
-            for r in search_sloppy_phrase(dec, terms, a.slop).limit(a.k).collect()
-        ]
     elif a.mode == "parsed":
-        from search_engine_spark.operators.parser import search_query_string
+        from search_engine_spark.operators.parser import parse_query, search_parsed
 
+        tree = parse_query(a.q, analyzer)
+        # --field col=value constraints AND in as fielded-index term leaves
+        # (requires an index built with build_index(fields=…))
+        fleaves = []
+        mfields = m.get("fields") or {}
+        for spec in a.field:
+            col, _, val = spec.partition("=")
+            if not val:
+                ap.error(f"--field expects col=value, got {spec!r}")
+            if col not in mfields:
+                ap.error(
+                    f"--field field {col!r} not in this index "
+                    f"(fields: {sorted(mfields)})"
+                )
+            # analyze the value with the FIELD's build analyzer (recorded in
+            # the manifest), NOT the content analyzer — porter would stem a
+            # naive-indexed field value into a term that does not exist
+            fan = mfields[col] if isinstance(mfields, dict) else "naive"
+            fts = field_terms(col, [val], fan)
+            if not fts:
+                ap.error(f"--field value {val!r} analyzes to nothing ({fan})")
+            fleaves += [("term", t) for t in fts]
+        if fleaves:
+            tree = ("and", [tree, *fleaves])
         corpus = _load_corpus(spark, a.corpus) if a.corpus else None
         out = live(
-            search_query_string(
-                spark, segs, stats, a.q, corpus=corpus, analyzer=analyzer,
+            search_parsed(
+                spark, segs, stats, tree, corpus=corpus, analyzer=analyzer,
                 max_expansions=a.max_expansions,
                 max_candidates=a.max_candidates,
                 allow_corpus_filter=not a.no_full_scan,
@@ -368,43 +369,6 @@ def main(argv: list[str] | None = None) -> int:
         )
         rows = [{"docId": r.docId, "score": round(r.score, 6)}
                 for r in out.collect()]
-    elif a.mode == "bool":
-        from search_engine_spark.operators.query import (
-            bool_leaf_terms,
-            parse_bool,
-            search_bool,
-        )
-
-        tree = parse_bool(" ".join(a.terms), analyzer)
-        dec = live(decode_postings(segs, bool_leaf_terms(tree)), tomb)
-        rows = [
-            {"docId": r.docId}
-            for r in search_bool(dec, tree).limit(a.k).collect()
-        ]
-    elif a.mode == "regex":
-        from search_engine_spark.operators.query import regex_terms
-
-        terms = [
-            r.term
-            for r in regex_terms(stats, a.terms[0], a.max_expansions).collect()
-        ]
-        dec = live(decode_postings(segs, terms), tomb)
-        rows = [
-            {"docId": r.docId}
-            for r in search_or(dec, terms).limit(a.k).collect()
-        ]
-    elif a.mode == "wildcard":
-        from search_engine_spark.operators.query import wildcard_terms
-
-        terms = [
-            r.term
-            for r in wildcard_terms(stats, a.terms[0], a.max_expansions).collect()
-        ]
-        dec = live(decode_postings(segs, terms), tomb)
-        rows = [
-            {"docId": r.docId}
-            for r in search_or(dec, terms).limit(a.k).collect()
-        ]
     elif a.mode in ("substring", "regexcontent", "grep"):
         from search_engine_spark.operators.codesearch import (
             grep_lines,
@@ -617,53 +581,6 @@ def main(argv: list[str] | None = None) -> int:
             .limit(a.k)
             .collect()
         ]
-    elif a.mode == "not":
-        terms = analyze_query(a.terms, analyzer)
-        neg = analyze_query(a.exclude, analyzer)
-        dec = live(decode_postings(segs, sorted(set(terms + neg))), tomb)
-        out = search_and_not(dec, terms, neg)
-        rows = [{"docId": r.docId} for r in out.limit(a.k).collect()]
-    else:
-        terms = analyze_query(a.terms, analyzer)
-        # --field col=value constraints AND in as fielded-index terms
-        # (requires an index built with build_index(fields=…))
-        fterms: list[str] = []
-        mfields = m.get("fields") or {}
-        for spec in a.field:
-            col, _, val = spec.partition("=")
-            if not val:
-                ap.error(f"--field expects col=value, got {spec!r}")
-            if col not in mfields:
-                ap.error(
-                    f"--field field {col!r} not in this index "
-                    f"(fields: {sorted(mfields)})"
-                )
-            # analyze the value with the FIELD's build analyzer (recorded in
-            # the manifest), NOT the content analyzer — porter would stem a
-            # naive-indexed field value into a term that does not exist
-            fan = mfields[col] if isinstance(mfields, dict) else "naive"
-            fts = field_terms(col, [val], fan)
-            if not fts:
-                ap.error(f"--field value {val!r} analyzes to nothing ({fan})")
-            fterms.extend(fts)
-        dec = live(
-            decode_postings(
-                segs, sorted(set(terms + fterms)),
-                with_positions=(a.mode == "phrase"),
-            ),
-            tomb,
-        )
-        fn = {
-            "and": lambda: search_and(dec, terms + fterms),
-            "or": lambda: search_or(dec, terms),
-            "phrase": lambda: search_phrase(dec, terms),
-            "keyword": lambda: (
-                search_and(dec, [terms[0]] + fterms)
-                if fterms
-                else search_keyword(dec, terms[0])
-            ),
-        }[a.mode]
-        rows = [{"docId": r.docId} for r in fn().limit(a.k).collect()]
     if a.highlight and rows and "docId" in rows[0]:
         if not a.corpus:
             ap.error("--highlight requires --corpus (raw doc text source)")

@@ -51,6 +51,7 @@ from ..sources.segments import (
     decode_postings,
     decode_postings_packed,
     load_segments,
+    load_term_stats,
     read_manifest,
     update_manifest,
 )
@@ -121,24 +122,24 @@ def delete_by_query(
 ) -> dict:
     """Delete-by-query (the Elasticsearch ``_delete_by_query`` /
     Lucene ``IndexWriter.deleteDocuments(Query)`` shape): evaluate a
-    boolean AND/OR/NOT query string against the index and tombstone every
-    matching docId.
+    query string against the index and tombstone every matching docId.
 
-    The match is :func:`..operators.query.search_bool` — leaf terms seek
-    via ``In`` pushdown, one collect_set agg, the tree as a codegen
-    expression — so deletion cost is query cost + O(|matches|) tombstone
-    write; segments are untouched until :func:`purge_deletes`. Purely
-    negative queries are rejected by ``parse_bool``'s Lucene MUST_NOT rule
-    (they would tombstone the whole corpus)."""
-    from .query import bool_leaf_terms, parse_bool, search_bool
+    ``query`` is :func:`..operators.parser.parse_query` syntax (AND/OR/NOT
+    with parentheses, phrases, prefix, fuzzy, ...) and the match is
+    :func:`..operators.parser.search_parsed` — leaf terms seek via ``In``
+    pushdown, one collect_set agg, the tree as a codegen expression — so
+    deletion cost is query cost + O(|matches|) tombstone write; segments
+    are untouched until :func:`purge_deletes`. Purely negative queries are
+    rejected by the parser's Lucene MUST_NOT rule (they would tombstone the
+    whole corpus)."""
+    from .parser import parse_query, search_parsed
 
-    tree = parse_bool(query, analyzer)
-    segs = load_segments(spark, index_dir)
-    # decode only the leaf terms' rows (In pushdown at the parquet scan);
-    # search_bool's own postings_for filter is then a no-op
-    decoded = decode_postings(segs, bool_leaf_terms(tree))
-    # search_bool is already one row per docId; add_tombstones dedups again
-    ids = search_bool(decoded, tree).select("docId")
+    tree = parse_query(query, analyzer)
+    # search_parsed is already one row per docId; add_tombstones dedups again
+    ids = search_parsed(
+        spark, load_segments(spark, index_dir),
+        load_term_stats(spark, index_dir), tree,
+    )
     return add_tombstones(spark, index_dir, ids)
 
 

@@ -12,8 +12,9 @@ Parity target ``IcsSearchEngine.java:74-199``:
   (ICS:184-199, CompareResults IIM:1103-1114).
 
 Spark shape: iterative DataFrame loop — one equi-join + one groupBy shuffle
-per iteration; lineage cut via localCheckpoint every few iterations (long
-iterative plans otherwise blow up the optimizer and executor stacks).
+per iteration (outdeg is pre-joined onto the cached edges); lineage cut via
+localCheckpoint every few iterations (long iterative plans otherwise blow
+up the optimizer and executor stacks).
 """
 
 from __future__ import annotations
@@ -33,18 +34,19 @@ def compute_pagerank(
 ) -> DataFrame:
     """nodes: (docId); edges: (src, dst). Returns (docId, pagerank).
 
-    At cluster scale: `edges` is re-used every iteration — cache it; outdeg
-    is joined per iteration on src (sort-merge or broadcast per AQE). The
-    rank vector (one row per node) is the only state carried.
+    At cluster scale: `edges` is re-used every iteration, so outdeg is
+    joined onto it once and the (src, dst, outdeg) relation is cached; each
+    iteration is then one join on src plus one groupBy. The rank vector
+    (one row per node) is the only state carried.
     """
     nodes = nodes.select("docId").distinct()
-    edges = edges.select("src", "dst").cache()
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg")).cache()
+    edges = edges.select("src", "dst")
+    outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
+    edges = edges.join(outdeg, "src").cache()
     ranks = nodes.withColumn("pr", F.lit(1.0))
     for i in range(num_iterations):
         contribs = (
             ranks.join(edges, ranks["docId"] == edges["src"])
-            .join(outdeg, "src")
             .select(F.col("dst").alias("docId"), (F.col("pr") / F.col("outdeg")).alias("c"))
             .groupBy("docId")
             .agg(F.sum("c").alias("s"))

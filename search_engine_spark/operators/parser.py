@@ -8,8 +8,18 @@ reference's query surfaces IIM:697-903):
     spark AND "table scan"~1 AND name:foo~1 AND n_chars:[100 TO 400]
       AND pre* AND NOT merge
 
-Grammar (explicit operators, like :func:`..query.parse_bool` — bare
-adjacency is rejected rather than silently OR'd):
+This is the engine's ONE boolean query language: the CLI ``--q``,
+``delete.delete_by_query`` and ``rank.score_query_filtered`` all evaluate
+through :func:`search_parsed`.
+
+Default operator: none. Bare adjacency (``spark join``) is a parse error
+naming the offending word, never an implicit OR or AND. Lucene and
+Elasticsearch make the default a setting, so the same words mean different
+result sets depending on it; no caller here needs one (phrases are quoted,
+conjunctions spelled out), and a loud error costs one keyword where a
+silent guess costs a wrong answer.
+
+Grammar:
 
 - ``AND`` / ``OR`` / ``NOT`` with parentheses; precedence NOT > AND > OR
 - ``term`` — analyzed; multi-token analysis becomes the AND of its tokens
@@ -32,9 +42,9 @@ adjacency is rejected rather than silently OR'd):
   (requires ``corpus``); Lucene brackets: ``[ ]`` inclusive, ``{ }``
   exclusive (mixable), ``*`` = open end (``col:[100 TO *]``)
 
-Execution (:func:`search_parsed`) compiles the WHOLE tree to one plan in
-the :func:`..query.search_bool` shape, generalized to heterogeneous
-leaves: every leaf contributes tagged ``(docId, leaf_id)`` rows —
+Execution (:func:`search_parsed`) compiles the WHOLE tree to one plan
+over heterogeneous leaves: every leaf contributes tagged
+``(docId, leaf_id)`` rows —
 
 - term / fielded / fuzzy-expansion leaves share ONE ``In``-pushed posting
   decode with a broadcast (term → leaf) fanout;
@@ -153,8 +163,9 @@ def _leaf_from_word(word: str, analyzer: str, field: str | None):
 
 def parse_query(query: str, analyzer: str = "naive"):
     """Parse a Lucene-style query string into a tree for
-    :func:`search_parsed` (term leaves are compatible with
-    :func:`..query.search_bool` trees)."""
+    :func:`search_parsed`: nested ``("and"|"or", [children])`` /
+    ``("not", child)`` nodes over leaves such as ``("term", token)``, so a
+    hand-built term tree is a valid input too."""
     toks = _scan(query)
     pos = 0
 

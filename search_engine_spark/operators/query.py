@@ -19,9 +19,7 @@ directly on the corpus (full-scan oracle path).
 
 from __future__ import annotations
 
-import re
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.analyzers import get_analyzer, tokens_column
@@ -963,145 +961,6 @@ def delete_documents(keyword: str) -> None:
     ``operators/delete.py`` (tombstone sets + query-side anti-filter +
     ``purge_deletes`` segment rewrite), going beyond the reference."""
     raise NotImplementedError("deletion is unimplemented, mirroring IIM:1375-1377")
-
-
-# --- nested boolean queries (the Lucene BooleanQuery shape) ----------------
-#
-# Tree nodes: ("term", token) | ("and", [children]) | ("or", [children]) |
-# ("not", child). NOT is only meaningful under a positively-satisfiable
-# tree (Lucene's MUST_NOT rule): a query that matches documents containing
-# NONE of its terms would need a corpus scan, not an index seek.
-
-
-def bool_leaf_terms(tree) -> list[str]:
-    """All distinct leaf terms of a boolean tree, sorted."""
-    kind = tree[0]
-    if kind == "term":
-        return [tree[1]]
-    if kind == "not":
-        return bool_leaf_terms(tree[1])
-    return sorted({t for child in tree[1] for t in bool_leaf_terms(child)})
-
-
-def _bool_eval_py(tree, present: set) -> bool:
-    kind = tree[0]
-    if kind == "term":
-        return tree[1] in present
-    if kind == "not":
-        return not _bool_eval_py(tree[1], present)
-    if kind == "and":
-        return all(_bool_eval_py(c, present) for c in tree[1])
-    return any(_bool_eval_py(c, present) for c in tree[1])
-
-
-def _bool_eval_col(tree, terms_col: Column) -> Column:
-    kind = tree[0]
-    if kind == "term":
-        return F.array_contains(terms_col, tree[1])
-    if kind == "not":
-        return ~_bool_eval_col(tree[1], terms_col)
-    cols = [_bool_eval_col(c, terms_col) for c in tree[1]]
-    out = cols[0]
-    for c in cols[1:]:
-        out = (out & c) if kind == "and" else (out | c)
-    return out
-
-
-def search_bool(postings: DataFrame, tree) -> DataFrame:
-    """Arbitrarily nested boolean query over the index — AND/OR/NOT trees
-    like ``("and", [("term","spark"), ("or",[...]), ("not", ...)])``
-    (the reference stops at flat AND/OR, IIM:747-903; this is the Lucene
-    BooleanQuery composition over the same posting lists).
-
-    Rejects purely negative trees (true on a document containing none of
-    the leaf terms) up front — those are corpus scans, not index queries.
-
-    Scale shape: ONE plan regardless of nesting depth — the leaf-term
-    posting scan (usual ``In`` pushdown) aggregates to a per-doc matched
-    term set (one partial+final ``collect_set`` shuffle, bounded by
-    |leaf terms| per doc), and the whole tree compiles to a single
-    ``array_contains`` boolean expression inside whole-stage codegen. No
-    per-operator joins, no recursion at execution time."""
-    if _bool_eval_py(tree, set()):
-        raise ValueError(
-            "purely negative boolean tree (matches docs with none of its "
-            "terms) — add at least one positive clause"
-        )
-    leaves = bool_leaf_terms(tree)
-    ts = (
-        postings_for(postings, leaves)
-        .groupBy("docId")
-        .agg(F.collect_set("term").alias("_ts"))
-    )
-    return ts.where(_bool_eval_col(tree, F.col("_ts"))).select("docId")
-
-
-def parse_bool(query: str, analyzer: str = "naive"):
-    """Parse ``"spark AND (join OR merge) AND NOT scan"`` into a boolean
-    tree for :func:`search_bool`. Precedence NOT > AND > OR; parentheses
-    group; bare adjacency is invalid (be explicit). Each term analyzes with
-    ``analyzer``; a term that analyzes to several tokens becomes their AND
-    (the full-scan multi-token convention); a term the analyzer drops
-    entirely (e.g. a stop word) is rejected."""
-    toks = re.findall(r"\(|\)|[^\s()]+", query)
-    pos = 0
-
-    def peek():
-        return toks[pos] if pos < len(toks) else None
-
-    def take(expected=None):
-        nonlocal pos
-        if pos >= len(toks):
-            raise ValueError(f"unexpected end of query: {query!r}")
-        t = toks[pos]
-        if expected is not None and t != expected:
-            raise ValueError(f"expected {expected!r}, got {t!r} in {query!r}")
-        pos += 1
-        return t
-
-    def atom():
-        t = peek()
-        if t == "(":
-            take("(")
-            node = or_expr()
-            take(")")
-            return node
-        if t in (None, ")", "AND", "OR", "NOT"):
-            raise ValueError(f"expected a term, got {t!r} in {query!r}")
-        word = take()
-        analyzed = analyze_query([word], analyzer)
-        if not analyzed:
-            raise ValueError(f"term {word!r} analyzes to nothing ({analyzer})")
-        if len(analyzed) == 1:
-            return ("term", analyzed[0])
-        return ("and", [("term", a) for a in analyzed])
-
-    def unary():
-        if peek() == "NOT":
-            take("NOT")
-            return ("not", unary())
-        return atom()
-
-    def and_expr():
-        node = unary()
-        children = [node]
-        while peek() == "AND":
-            take("AND")
-            children.append(unary())
-        return children[0] if len(children) == 1 else ("and", children)
-
-    def or_expr():
-        node = and_expr()
-        children = [node]
-        while peek() == "OR":
-            take("OR")
-            children.append(and_expr())
-        return children[0] if len(children) == 1 else ("or", children)
-
-    tree = or_expr()
-    if pos != len(toks):
-        raise ValueError(f"trailing input {toks[pos:]!r} in {query!r}")
-    return tree
 
 
 def search_sloppy_phrase(

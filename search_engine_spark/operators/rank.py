@@ -2017,11 +2017,13 @@ def score_query_filtered(
     docid_span: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Ranked search WITHIN a boolean filter: BM25 top-k over only the
-    documents matching ``filter_tree`` (a :func:`..query.search_bool` tree —
-    e.g. ``parse_bool("lang:en AND NOT draft")`` against fielded terms).
+    documents matching ``filter_tree`` (a :func:`..parser.parse_query` tree —
+    e.g. ``parse_query("lang:en AND NOT repo:draft")`` against fielded terms,
+    or a hand-built ``("and", [("term", t), ("not", ("term", u))])``).
 
-    Composition: the filter evaluates through the index (leaf-term pushdown,
-    one collect_set agg), the query scores through the usual block-max DAAT,
+    Composition: the filter evaluates through the index
+    (:func:`..parser.search_parsed`: leaf-term pushdown, one collect_set
+    agg), the query scores through the usual block-max DAAT,
     and a semi-join keeps scored docs inside the filter before the top-k.
     Both sides are candidate-sized (posting lists of their own terms), never
     the corpus; the join key is docId so AQE broadcasts the smaller side.
@@ -2031,16 +2033,14 @@ def score_query_filtered(
     constraint. When a filter is highly selective and recurring (tenant,
     language), index it as a FIELD and put it in the query instead
     (``q2fl``/fielded terms shrink candidate generation itself)."""
-    from .query import bool_leaf_terms, search_bool
-    from ..sources.segments import decode_postings
+    from .parser import search_parsed
 
     scored = score_query_daat(
         spark, segments, term_stats, keywords, n_docs, avgdl, scorer,
         k=None, analyzer=analyzer, ties="asc", deleted=deleted,
         docid_span=docid_span,
     )
-    dec = decode_postings(segments, bool_leaf_terms(filter_tree))
-    allowed = search_bool(dec, filter_tree)
+    allowed = search_parsed(spark, segments, term_stats, filter_tree)
     out = (
         scored.join(allowed, "docId", "left_semi")
         .orderBy(F.desc("score"), F.asc("docId"))

@@ -58,14 +58,18 @@ def test_build_job_resume_noop(built, capsys):
     }
 
 
-@pytest.mark.parametrize("mode", ["bm25", "tfidf", "and", "phrase"])
-def test_query_job(built, capsys, mode):
+@pytest.mark.parametrize("query,mode", [
+    (["--mode", "bm25", "appl", "rotten"], "bm25"),
+    (["--mode", "tfidf", "appl", "rotten"], "tfidf"),
+    (["--q", "appl AND rotten"], "parsed"),
+    (["--q", '"appl rotten"'], "parsed"),
+], ids=["bm25", "tfidf", "and", "phrase"])
+def test_query_job(built, capsys, query, mode):
     from jobs.query import main as query_main
 
     _, idx = built
     rc = query_main([
-        "--index", idx, "--mode", mode, "--k", "5", "--master", "local[4]",
-        "appl", "rotten",
+        "--index", idx, "--k", "5", "--master", "local[4]", *query,
     ])
     assert rc == 0
     line = capsys.readouterr().out.strip().splitlines()[-1]
@@ -77,8 +81,8 @@ def test_query_job(built, capsys, mode):
 
 
 def test_query_job_extended_modes(built, capsys):
-    """prefix / near / not modes through the spark-submit surface, checked
-    by their containment laws against the established modes."""
+    """prefix / near / not queries through the spark-submit surface, checked
+    by their containment laws against the established queries."""
     from jobs.query import main as query_main
 
     _, idx = built
@@ -89,28 +93,27 @@ def test_query_job_extended_modes(built, capsys):
         out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
         return {r["docId"] for r in out["results"]}
 
-    keyword = run(["--mode", "keyword", "--k", "1000", "appl"])
+    keyword = run(["--q", "appl", "--k", "1000"])
     assert keyword  # synthetic vocab contains the 'appl' stem
     # prefix hits ⊇ the exact-term hits for a prefix equal to the term
-    prefix = run(["--mode", "prefix", "--k", "1000", "appl"])
+    prefix = run(["--q", "appl*", "--k", "1000"])
     assert keyword <= prefix
     # near hits ⊆ AND hits, and widening the window only adds docs
-    both = run(["--mode", "and", "--k", "1000", "rotten", "apple"])
+    both = run(["--q", "rotten AND apple", "--k", "1000"])
     near3 = run(["--mode", "near", "--window", "3", "--k", "1000",
                  "rotten", "apple"])
     near9 = run(["--mode", "near", "--window", "9", "--k", "1000",
                  "rotten", "apple"])
     assert near3 <= near9 <= both
-    # not-mode results never contain the excluded term
-    rotten = run(["--mode", "keyword", "--k", "1000", "rotten"])
-    not_hits = run(["--mode", "not", "--k", "1000",
-                    "--exclude", "rotten", "--", "apple"])
+    # AND NOT results never contain the excluded term
+    rotten = run(["--q", "rotten", "--k", "1000"])
+    not_hits = run(["--q", "apple AND NOT rotten", "--k", "1000"])
     assert not_hits == keyword - rotten
 
 
 def test_query_job_fuzzy_suggest_mlt(built, capsys):
-    """fuzzy / suggest / mlt modes through the spark-submit surface:
-    containment + shape laws against the established modes."""
+    """fuzzy queries and suggest / mlt modes through the spark-submit
+    surface: containment + shape laws against the established modes."""
     from jobs.query import main as query_main
 
     src, idx = built
@@ -122,11 +125,11 @@ def test_query_job_fuzzy_suggest_mlt(built, capsys):
 
     # fuzzy at dist 0 == exact keyword; widening the radius only adds docs
     keyword = {r["docId"] for r in run(
-        ["--mode", "keyword", "--k", "1000", "appl"])["results"]}
+        ["--q", "appl", "--k", "1000"])["results"]}
     f0 = {r["docId"] for r in run(
-        ["--mode", "fuzzy", "--max-dist", "0", "--k", "1000", "appl"])["results"]}
+        ["--q", "appl~0", "--k", "1000"])["results"]}
     f1 = {r["docId"] for r in run(
-        ["--mode", "fuzzy", "--max-dist", "1", "--k", "1000", "appl"])["results"]}
+        ["--q", "appl~1", "--k", "1000"])["results"]}
     assert f0 == keyword and keyword <= f1
 
     # suggest: the exact dictionary term ranks itself first at dist 0
@@ -316,7 +319,7 @@ def test_compact_job_auto(built, spark, capsys):
 
 def test_fielded_build_and_field_query_jobs(spark, tmp_path_factory, capsys):
     """--field end to end: build a fielded index via the build job, then
-    constrain and/keyword queries by field through the query job."""
+    constrain --q queries by field through the query job."""
     from jobs.build_index import main as build_main
     from jobs.query import main as query_main
 
@@ -347,18 +350,30 @@ def test_fielded_build_and_field_query_jobs(spark, tmp_path_factory, capsys):
         .select(F.explode(F.split(F.lower("content"), r"\s+")).alias("term"))
         .groupBy("term").count().orderBy(F.desc("count")).limit(1).collect()
     )
-    all_hits = run(["--mode", "keyword", "--k", "1000", kw])
-    fielded = run(["--mode", "keyword", "--k", "1000", "--field", f"lang={lang}", kw])
+    all_hits = run(["--q", kw, "--k", "1000"])
+    fielded = run(["--q", kw, "--k", "1000", "--field", f"lang={lang}"])
     in_lang = {
         r.docId for r in corpus.where(F.col("lang") == lang).select("docId").collect()
     }
     assert fielded == all_hits & in_lang
     assert fielded < all_hits  # the constraint actually prunes
-    # and-mode accepts fields too; or-mode rejects them
-    and_hits = run(["--mode", "and", "--k", "1000", "--field", f"lang={lang}", kw])
+    # the fielded term in the query string is the same constraint
+    and_hits = run(["--q", f"{kw} AND lang:{lang}", "--k", "1000"])
     assert and_hits == fielded
+    # --field ANDs into any --q tree, here an OR
+    kw2 = next(
+        r.term for r in spark.read.parquet(src)
+        .select(F.explode(F.split(F.lower("content"), r"\s+")).alias("term"))
+        .groupBy("term").count().orderBy("count", "term").limit(1).collect()
+    )
+    either = run(["--q", f"{kw} OR {kw2}", "--k", "1000"])
+    assert either == all_hits | run(["--q", kw2, "--k", "1000"])
+    or_fielded = run(["--q", f"{kw} OR {kw2}", "--k", "1000",
+                      "--field", f"lang={lang}"])
+    assert or_fielded == either & in_lang
+    # modes other than parsed reject --field
     with pytest.raises(SystemExit):
-        query_main(["--index", idx, "--master", "local[4]", "--mode", "or",
+        query_main(["--index", idx, "--master", "local[4]", "--mode", "bm25",
                     "--field", f"lang={lang}", kw])
 
 
@@ -604,17 +619,17 @@ def test_query_job_msm_and_highlight(built, capsys):
     def ids(out):
         return {r["docId"] for r in out["results"]}
 
-    or_set = ids(run(["--mode", "or", "--k", "1000", "rotten", "apple"]))
-    and_set = ids(run(["--mode", "and", "--k", "1000", "rotten", "apple"]))
+    or_set = ids(run(["--q", "rotten OR apple", "--k", "1000"]))
+    and_set = ids(run(["--q", "rotten AND apple", "--k", "1000"]))
     msm1 = ids(run(["--mode", "msm", "--min-match", "1", "--k", "1000",
                     "rotten", "apple"]))
     msm2 = ids(run(["--mode", "msm", "--min-match", "2", "--k", "1000",
                     "rotten", "apple"]))
     assert msm1 == or_set and msm2 == and_set and and_set < or_set
     # highlight: snippets wrap the literal user words, results unchanged
-    plain = run(["--mode", "and", "--k", "5", "rotten", "apple"])
-    out = run(["--mode", "and", "--k", "5", "--corpus", src, "--highlight",
-               "rotten", "apple"])
+    plain = run(["--q", "rotten AND apple", "--k", "5"])
+    out = run(["--q", "rotten AND apple", "--k", "5", "--corpus", src,
+               "--highlight"])
     assert ids(out) == ids(plain) and out["results"]
     snips = [r.get("snippet") for r in out["results"]]
     assert any(s and "<em>" in s for s in snips)
@@ -636,7 +651,7 @@ def test_query_job_spanfirst(built, capsys):
         out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
         return {r["docId"] for r in out["results"]}
 
-    keyword = run(["--mode", "keyword", "--k", "1000", "appl"])
+    keyword = run(["--q", "appl", "--k", "1000"])
     sf2 = run(["--mode", "spanfirst", "--window", "2", "--k", "1000", "appl"])
     sf50 = run(["--mode", "spanfirst", "--window", "50", "--k", "1000", "appl"])
     big = run(["--mode", "spanfirst", "--window", "100000", "--k", "1000",
@@ -711,7 +726,7 @@ def test_query_job_agg_and_rescore_modes(built, capsys):
 
     # stats/percentiles over hit docIds: n == |hits|, median within min/max
     hits = {r["docId"] for r in
-            run(["--mode", "keyword", "--k", "1000", "apple"])["results"]}
+            run(["--q", "apple", "--k", "1000"])["results"]}
     st = run(["--mode", "stats", "--corpus", src, "--stat-field", "docId",
               "apple"])["results"]
     row = next(r for r in st if r["col"] == "docId")

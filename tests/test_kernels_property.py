@@ -147,29 +147,37 @@ def _tree_strategy():
         st.sets(st.sampled_from(_VOCAB)), min_size=1, max_size=8
     ),
 )
-def test_search_bool_matches_python_oracle(spark, tree, docs):
-    """For any nested tree and any tiny corpus: search_bool == per-doc
+def test_search_parsed_matches_python_oracle(spark, tree, docs):
+    """For any nested tree and any tiny corpus: search_parsed == per-doc
     python evaluation, restricted to docs containing >= 1 leaf term (the
     index-candidate set); purely negative trees raise instead."""
-    from search_engine_spark.operators.build import build_postings
-    from search_engine_spark.operators.query import (
-        _bool_eval_py,
-        bool_leaf_terms,
-        search_bool,
+    from search_engine_spark.operators.build import (
+        build_postings,
+        encode_segments,
+        term_stats_from_segments,
+    )
+    from search_engine_spark.operators.parser import (
+        _collect_leaves,
+        _eval_py,
+        search_parsed,
     )
 
     rows = [(i, " ".join(sorted(d)) if d else "zz") for i, d in enumerate(docs)]
     corpus = spark.createDataFrame(rows, "docId long, content string")
-    postings = build_postings(corpus, "naive")
-    if _bool_eval_py(tree, set()):
+    segs = encode_segments(build_postings(corpus, "naive"), 1)
+    ts = term_stats_from_segments(segs)
+    if _eval_py(tree, set()):
         with pytest.raises(ValueError):
-            search_bool(postings, tree)
+            search_parsed(spark, segs, ts, tree)
         return
-    leaves = set(bool_leaf_terms(tree))
-    got = sorted(r.docId for r in search_bool(postings, tree).collect())
+    present = [{("term", w) for w in d} for d in docs]
+    leaves: list = []
+    _collect_leaves(tree, leaves)
+    leaves = set(leaves)
+    got = sorted(r.docId for r in search_parsed(spark, segs, ts, tree).collect())
     exp = [
-        i for i, d in enumerate(docs)
-        if (d & leaves) and _bool_eval_py(tree, d)
+        i for i, d in enumerate(present)
+        if (d & leaves) and _eval_py(tree, d)
     ]
     assert got == exp
 

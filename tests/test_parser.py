@@ -86,11 +86,15 @@ def test_search_parsed_equals_composition(spark, parsed_index):
     run = lambda q: _ids(search_query_string(
         spark, segs, ts, q, corpus=corpus, analyzer="naive"))
 
-    # boolean core matches search_bool
+    # boolean core matches the AND / OR / AND-NOT operators it composes
     got = run("spark AND (scan OR filter) AND NOT apple")
-    want = _ids(Q.search_bool(
-        dec, Q.parse_bool("spark AND (scan OR filter) AND NOT apple", "naive")))
+    want = sorted(
+        set(_ids(Q.search_and_not(dec, ["spark"], ["apple"])))
+        & set(_ids(Q.search_or(dec, ["scan", "filter"]))))
     assert got == want and got
+    assert got == sorted(
+        set(_ids(Q.search_and(dec, ["spark", "scan"])))
+        | set(_ids(Q.search_and(dec, ["spark", "filter"]))))
 
     # phrase leaf matches search_phrase
     pos = S.decode_postings(segs, ["table", "scan"], with_positions=True)

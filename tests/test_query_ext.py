@@ -319,17 +319,22 @@ def test_regex_search(spark, tmp_path):
 
 
 def test_bool_tree_query(spark, tmp_path):
-    """Nested boolean tree: parser precedence and evaluator semantics vs a
-    per-doc python oracle; purely negative trees rejected."""
+    """Nested boolean tree through the query-string parser: precedence and
+    evaluator semantics vs a per-doc python oracle; purely negative trees
+    rejected."""
     import pytest as _pytest
 
-    from search_engine_spark.operators.query import (
-        _bool_eval_py,
-        bool_leaf_terms,
-        parse_bool,
-        search_bool,
+    from search_engine_spark.operators.build import (
+        build_postings,
+        encode_segments,
+        term_stats_from_segments,
     )
-    from search_engine_spark.operators.build import build_postings
+    from search_engine_spark.operators.parser import (
+        _collect_leaves,
+        _eval_py,
+        parse_query,
+        search_parsed,
+    )
     from tests.conftest import corpus_from_texts
 
     texts = [
@@ -340,27 +345,30 @@ def test_bool_tree_query(spark, tmp_path):
         "spark alone here",         # 4: no join/merge
     ]
     corpus = corpus_from_texts(spark, texts)
-    postings = build_postings(corpus, "naive")
-    tree = parse_bool("spark AND (join OR merge) AND NOT scan", "naive")
-    got = sorted(r.docId for r in search_bool(postings, tree).collect())
+    segs = encode_segments(build_postings(corpus, "naive"), 1)
+    ts = term_stats_from_segments(segs)
+    run = lambda t: sorted(
+        r.docId for r in search_parsed(spark, segs, ts, t).collect())
+    tree = parse_query("spark AND (join OR merge) AND NOT scan", "naive")
     exp = [
-        i for i, t in enumerate(texts) if _bool_eval_py(tree, set(t.split()))
+        i for i, t in enumerate(texts)
+        if _eval_py(tree, {("term", w) for w in t.split()})
     ]
-    assert got == exp == [0, 1]
+    assert run(tree) == exp == [0, 1]
     # OR at top level; AND binds tighter than OR
-    t2 = parse_bool("scan OR merge AND slow", "naive")
-    got2 = sorted(r.docId for r in search_bool(postings, t2).collect())
-    assert got2 == [1, 2]
+    assert run(parse_query("scan OR merge AND slow", "naive")) == [1, 2]
     # purely negative trees are rejected up front
     with _pytest.raises(ValueError):
-        search_bool(postings, parse_bool("NOT spark", "naive"))
+        run(parse_query("NOT spark", "naive"))
     with _pytest.raises(ValueError):
-        search_bool(postings, parse_bool("scan OR NOT spark", "naive"))
+        run(parse_query("scan OR NOT spark", "naive"))
     # parser errors
     for bad in ("spark AND", "(spark", "spark join", "AND spark"):
         with _pytest.raises(ValueError):
-            parse_bool(bad, "naive")
-    assert bool_leaf_terms(tree) == ["join", "merge", "scan", "spark"]
+            parse_query(bad, "naive")
+    leaves: list = []
+    _collect_leaves(tree, leaves)
+    assert sorted(t for _, t in leaves) == ["join", "merge", "scan", "spark"]
 
 
 def test_sloppy_phrase(spark):
